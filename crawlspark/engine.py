@@ -44,9 +44,12 @@ carries no per-round recomputation.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
+import warnings
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -509,11 +512,23 @@ class CrawlEngine:
             f.write(str(round_id))
         os.replace(tmp, self._head_path())
 
+    @staticmethod
+    def _release_selection(sel: dict | None) -> None:
+        """Join a selection's fill job (a speculative one may still be
+        running in the background) and drop its caches."""
+        if sel is None:
+            return
+        err = sel["fill"].exception() if sel["fill"] is not None else None
+        if err is not None:
+            # harmless to the crawl (nothing reads this selection), but
+            # a fill that fails here would fail the round that used it
+            warnings.warn(f"discarded speculative selection failed: {err!r}")
+        for k in ("pending", "denied", "selected"):
+            sel[k].unpersist()
+
     def _discard_presel(self) -> None:
         ps, self._presel = self._presel, None
-        if ps is not None:
-            for k in ("pending", "denied", "selected"):
-                ps[k].unpersist()
+        self._release_selection(ps)
 
     def resume(self) -> int:
         """Roll every table back to the last committed round; return the
@@ -876,10 +891,11 @@ class CrawlEngine:
         1. spawn + import the executor Python-worker pool (numpy + codec
            tables) so round 0's fetch stage measures fetching, not
            interpreter start;
-        2. on a FRESH crawl, pin round 0's selection exactly the way the
-           in-round speculative selection pins round N+1 under round N's
-           fetch stage (run_round:1279) — seed loading is round 0's
-           "previous stage". Same gate as in-round speculation: skipped
+        2. on a FRESH crawl, pin round 0's selection and fill its
+           selected cache with one count — seed loading is round 0's
+           "previous stage". Round 0 then runs the (cheap, cache-fed)
+           selection fill itself, so add_seeds does no more work than
+           that count. Same gate as in-round speculation: skipped
            when min_delay / adaptive budgets make selection depend on
            runtime state."""
         try:
@@ -894,21 +910,9 @@ class CrawlEngine:
             or self.adaptive_budget
         ):
             return
-        p_pending = (
-            self.frontier.read(self.spark)
-            .filter(F.col("not_before") <= 0)
-            .cache()
-        )
-        p_allowed, p_denied = self._filter_robots(p_pending)
-        p_denied = p_denied.cache()
-        p_selected = self._select_with_status(p_allowed, 0).cache()
-        p_selected.count()
-        self._presel = {
-            "round_id": 0,
-            "pending": p_pending,
-            "denied": p_denied,
-            "selected": p_selected,
-        }
+        sel = self._select(0)
+        sel["selected"].count()
+        self._presel = sel
 
     # ------------------------------------------------------------ round
     def _pending(self, round_id: int) -> DataFrame:
@@ -918,6 +922,107 @@ class CrawlEngine:
         return self.frontier.read(self.spark).filter(
             F.col("not_before") <= round_id
         )
+
+    def _select(self, round_id: int, cooling: DataFrame | None = None) -> dict:
+        """A round's selection as unfilled caches: ripe pending rows
+        (minus cooling hosts), robots-denied rows, and the budgeted
+        selection with status. ``fill`` holds the background fill job
+        of a speculative selection (None until one is submitted)."""
+        pending = self._pending(round_id)
+        if cooling is not None:
+            pending = pending.join(F.broadcast(cooling), "host", "left_anti")
+        pending = pending.cache()
+        allowed, denied = self._filter_robots(pending)
+        return {
+            "round_id": round_id,
+            "pending": pending,
+            "denied": denied.cache(),
+            "selected": self._select_with_status(allowed, round_id).cache(),
+            "fill": None,
+        }
+
+    def _arrivals(self, selected: DataFrame) -> DataFrame:
+        """Canonicalized outlink and redirect targets of a selection
+        (url, depth, hops), before any seen filter."""
+        arrivals = expand_outlinks(
+            selected.filter(F.col("status") == 200).select("url", "host", "depth"),
+            self.cfg.n_hosts,
+            self.cfg.target_space,
+            self.cfg.max_depth,
+        ).select(
+            canonicalize("dst_url").alias("url"), "depth", F.lit(0).alias("hops")
+        )
+        if self.cfg.redirect_permille > 0:
+            # redirect Locations join the arrival stream: depth carries
+            # over (a 3xx consumes no link depth), hops+1 under the
+            # chain cap. Loops need no special casing — a target that
+            # was already resolved is dropped by the seen anti-join.
+            targets = selected.filter(
+                (F.col("status") == REDIRECT_STATUS)
+                & (F.col("hops") < self.cfg.max_redirect_hops)
+            ).select(
+                canonicalize(
+                    redirect_target(self.cfg.n_hosts, self.cfg.target_space)
+                ).alias("url"),
+                "depth",
+                (F.col("hops") + 1).alias("hops"),
+            )
+            arrivals = arrivals.unionByName(targets)
+        return arrivals
+
+    def _fill_query(self, sel: dict) -> DataFrame:
+        """The one action that fills a selection's caches (plan only;
+        run it with _fill). Besides filling them it yields what the
+        round needs before fan-out: the pending and denied counts, the
+        status-200 count (which sizes the fetch) and ``dirty``, a
+        superset of the frontier buckets the round changes:
+        B(selected) ∪ B(denied) ∪ B(arrivals), taken before the seen
+        filter. Retries and 429 re-entries are selected rows, so only
+        sitemap and recrawl arrivals fall outside it. Rewriting a
+        bucket whose content does not change is harmless."""
+        b = self._bucket().alias("b")
+        zero, one = F.lit(0), F.lit(1)
+
+        def part(df, bucket, p, d, ok):
+            return df.select(bucket, p.alias("p"), d.alias("d"), ok.alias("ok"))
+
+        ok = (F.col("status") == 200).cast("int")
+        return (
+            part(sel["pending"], F.lit(None).cast("int").alias("b"), one, zero, zero)
+            .unionByName(part(sel["denied"], b, zero, one, zero))
+            .unionByName(part(sel["selected"], b, zero, zero, ok))
+            .unionByName(part(self._arrivals(sel["selected"]), b, zero, zero, zero))
+            .agg(
+                F.collect_set("b").alias("dirty"),
+                F.sum("p").alias("pending"),
+                F.sum("d").alias("denied"),
+                F.sum("ok").alias("ok"),
+            )
+        )
+
+    @staticmethod
+    def _fill(query: DataFrame) -> dict:
+        r = query.collect()[0]
+        return {
+            "dirty": sorted(int(x) for x in r["dirty"]),
+            "pending": int(r["pending"] or 0),
+            "denied": int(r["denied"] or 0),
+            "ok": int(r["ok"] or 0),
+        }
+
+    def _speculate(self, round_id: int) -> None:
+        """Pin round ``round_id``'s selection and run its fill on a
+        background thread. The plan is built here, so the job starts at
+        once. The calling round does not wait for it: the next
+        run_round joins the fill where it needs the counts, so the job
+        overlaps that round's planning. _discard_presel joins it before
+        dropping the caches."""
+        sel = self._select(round_id)
+        query = self._fill_query(sel)
+        pool = ThreadPoolExecutor(max_workers=1)
+        sel["fill"] = pool.submit(self._fill, query)
+        pool.shutdown(wait=False)
+        self._presel = sel
 
     @property
     def cuckoo_on(self) -> bool:
@@ -960,17 +1065,6 @@ class CrawlEngine:
         """Execute one crawl round; returns counters (including the
         future-work schedule used by run()'s round skipping). Commits
         atomically via the round manifest."""
-        import time as _time
-
-        _prof = os.environ.get("CRAWLSPARK_PROFILE") == "1"
-        _t = [_time.time()]
-
-        def _tick(label: str) -> None:
-            if _prof:
-                now = _time.time()
-                print(f"[round {round_id}] {label:24s} {now - _t[0]:7.2f}s", flush=True)
-                _t[0] = now
-
         # resolve table snapshots NOW (reads are manifest-pinned, so the
         # concurrent appends below cannot shift what this round sees)
         seen_df = self.seen.read(self.spark)
@@ -990,30 +1084,19 @@ class CrawlEngine:
                 .select("host")
             )
 
-        # reuse the speculative selection computed under the PREVIOUS
-        # round's fetch stage if it targeted this round (it pinned the
+        # reuse the speculative selection pinned at the end of the
+        # PREVIOUS round if it targeted this round (it pinned the
         # frontier snapshot right after that round's frontier commit —
         # exactly what this round would read); else build it now.
         # (Speculation is disabled under min_delay — see its gate: the
         # cooling set depends on this round's selections.)
         ps, self._presel = self._presel, None
         if ps is not None and ps["round_id"] == round_id:
-            pending, denied, selected = ps["pending"], ps["denied"], ps["selected"]
-            preselected = True
+            sel = ps
         else:
-            if ps is not None:  # stale speculation: drop its caches
-                for k in ("pending", "denied", "selected"):
-                    ps[k].unpersist()
-            pending = self.frontier.read(self.spark).filter(
-                F.col("not_before") <= round_id
-            )
-            if cooling is not None:
-                pending = pending.join(F.broadcast(cooling), "host", "left_anti")
-            pending = pending.cache()
-            allowed, denied = self._filter_robots(pending)
-            denied = denied.cache()
-            selected = self._select_with_status(allowed, round_id).cache()
-            preselected = False
+            self._release_selection(ps)  # stale speculation
+            sel = self._select(round_id, cooling)
+        denied, selected = sel["denied"], sel["selected"]
 
         # round stats ride the fetch-log append as observed metrics —
         # no separate aggregation job per round (r2 VERDICT #6)
@@ -1075,42 +1158,6 @@ class CrawlEngine:
             "retry_count",
         )
         ok = selected.filter(F.col("status") == 200)
-        # lineage rides the write action via an accumulator — no extra job
-        acc = self.spark.sparkContext.accumulator({}, _DictAccum())
-        # EXPLICIT SKEW SPLIT before the fetch stage: the politeness
-        # window leaves rows partitioned by host, so the hot (Zipf-head)
-        # host's entire batch would execute as ONE fetch task. Rebalance
-        # round-robin so fetch work spreads across all executor slots.
-        # 2 task waves per slot (retry/skew granularity), rounded UP to
-        # a whole number of waves: a partition count that is not a
-        # multiple of the slot count leaves the last wave running on a
-        # fraction of the cluster — measured ~15% of the whole fetch
-        # stage at 3 slots with the old max(2*par, 8)=8 (waves 3/3/2).
-        # Wave-aligned counts cost nothing at any width and the output
-        # is partitioning-invariant (tests/test_parallelism.py).
-        par = max(self.spark.sparkContext.defaultParallelism, 1)
-        n_slots = par * max(2, -(-8 // par))
-        fetch_in = ok.select("url")
-        if self.cfg.change_period:
-            # content drift (SynthConfig.change_period): a deterministic
-            # third of URLs serve new content every p(url) rounds —
-            # version is a pure function of (url, round_id), so resume
-            # and parallelism replay bit-identically
-            fetch_in = ok.select(
-                "url", self._version_of(F.lit(round_id)).alias("version")
-            )
-        fetched = fetch_images(fetch_in.repartition(n_slots), lineage_acc=acc)
-        images_df = fetched.select(
-            "image_id",
-            "url",
-            "bytes",
-            "w",
-            "h",
-            "fmt",
-            "caption",
-            "phash",
-            F.lit(round_id).cast("int").alias("round_id"),
-        )
 
         # 301s are RESOLVED this round: seen (never refetched), no body;
         # their Location re-enters the frontier below with hops+1
@@ -1186,31 +1233,9 @@ class CrawlEngine:
         # cached: the seen-split consumes this subtree through several
         # semi/anti branches — without the cache the explode+groupBy
         # re-executes once per branch inside the frontier-update job
-        arrivals = expand_outlinks(
-            ok.select("url", "host", "depth"),
-            self.cfg.n_hosts,
-            self.cfg.target_space,
-            self.cfg.max_depth,
-        ).select(
-            canonicalize("dst_url").alias("url"), "depth", F.lit(0).alias("hops")
-        )
-        if self.cfg.redirect_permille > 0:
-            # redirect Locations join the arrival stream: depth carries
-            # over (a 3xx consumes no link depth), hops+1 under the
-            # chain cap. Loops need no special casing — a target that
-            # was already resolved is dropped by the seen anti-join.
-            targets = redirs.filter(
-                F.col("hops") < self.cfg.max_redirect_hops
-            ).select(
-                canonicalize(
-                    redirect_target(self.cfg.n_hosts, self.cfg.target_space)
-                ).alias("url"),
-                "depth",
-                (F.col("hops") + 1).alias("hops"),
-            )
-            arrivals = arrivals.unionByName(targets)
         outlinks = (
-            arrivals.groupBy("url")
+            self._arrivals(selected)
+            .groupBy("url")
             .agg(F.min(F.struct(F.col("depth"), F.col("hops"))).alias("_s"))
             .select(
                 "url",
@@ -1239,7 +1264,9 @@ class CrawlEngine:
         # outlinks merge in via the associative per-URL reduce. Buckets
         # receiving no departures/arrivals carry their leaf dirs forward
         # untouched, so the per-round frontier write is O(round delta),
-        # not O(|pending|).
+        # not O(|pending|). The dirty set comes from the selection fill
+        # (a superset taken before the seen filter), so the rewrite
+        # starts at fan-out with no discovery job of its own.
         touched = selected.select("url").unionByName(denied.select("url"))
         incoming = retries.unionByName(new_rows)
         n_sitemap_seeds = 0
@@ -1321,23 +1348,38 @@ class CrawlEngine:
                 )
             )
             incoming = incoming.unionByName(recrawl_rows)
-        # cached: consumed twice inside the frontier job (dirty-bucket
-        # discovery, then the rewrite itself)
-        incoming = incoming.cache()
         bexpr = self._bucket()
 
+        # join the selection fill: a speculative one was submitted at
+        # the end of the previous round and has overlapped the planning
+        # above; otherwise it runs now and materializes the shared
+        # caches before fan-out, so the concurrent jobs don't race to
+        # fill them (the log append reads the cache with coalesce(2)
+        # and must never be the cache-filling job)
+        fill = (
+            sel["fill"].result()
+            if sel["fill"] is not None
+            else self._fill(self._fill_query(sel))
+        )
+
         def _frontier_update() -> tuple[int, int]:
-            """Runs as one of the round's concurrent jobs: find dirty
-            buckets, rewrite only those. Returns (n_dirty, rows_written)."""
+            """Runs as one of the round's concurrent jobs: rewrite the
+            dirty buckets. Returns (n_dirty, rows_written)."""
             from pyspark.sql import Observation
 
-            dirty = sorted(
-                int(r["b"])
-                for r in incoming.select(bexpr.alias("b"))
-                .unionByName(touched.select(bexpr.alias("b")))
-                .distinct()
-                .collect()
-            )
+            dirty = set(fill["dirty"])
+            extra = [df.select("url") for df in (sm_rows, due) if df is not None]
+            if extra:
+                # sitemap and recrawl arrivals depend on host_state /
+                # seen, not on the selection, so they keep a collect
+                dirty.update(
+                    int(r["b"])
+                    for r in functools.reduce(DataFrame.unionByName, extra)
+                    .select(bexpr.alias("b"))
+                    .distinct()
+                    .collect()
+                )
+            dirty = sorted(dirty)
             if not dirty:
                 return 0, 0
             survivors_dirty = self.frontier.read_buckets(self.spark, dirty).join(
@@ -1353,65 +1395,67 @@ class CrawlEngine:
             self.frontier.replace_buckets(pending_next, dirty, bexpr)
             return len(dirty), int(obs.get["rows"])
 
+        # lineage rides the write action via an accumulator — no extra job
+        acc = self.spark.sparkContext.accumulator({}, _DictAccum())
+        # EXPLICIT SKEW SPLIT before the fetch stage: the politeness
+        # window leaves rows partitioned by host, so the hot (Zipf-head)
+        # host's entire batch would execute as ONE fetch task. Rebalance
+        # round-robin into ONE wave sized to the rows: min(slots,
+        # status-200 rows) partitions. Every Python task carries a fixed
+        # cost even on a reused worker (~0.15-0.3 s on a 4-core x86-64
+        # VM, most of it the worker's per-task import-cache reset
+        # re-reading pyspark.zip), so extra waves only add that cost:
+        # measured there after warm_workers, 600 rows fetched in 1.75 s
+        # as 8 partitions against 0.89 s as 4, and 13 rows in 1.0 s
+        # against 0.5 s. The output is partitioning-invariant
+        # (tests/test_parallelism.py).
+        par = max(self.spark.sparkContext.defaultParallelism, 1)
+        fetch_in = ok.select("url")
+        if self.cfg.change_period:
+            # content drift (SynthConfig.change_period): a deterministic
+            # third of URLs serve new content every p(url) rounds —
+            # version is a pure function of (url, round_id), so resume
+            # and parallelism replay bit-identically
+            fetch_in = ok.select(
+                "url", self._version_of(F.lit(round_id)).alias("version")
+            )
+        fetched = fetch_images(
+            fetch_in.repartition(max(1, min(par, fill["ok"]))), lineage_acc=acc
+        )
+        images_df = fetched.select(
+            "image_id",
+            "url",
+            "bytes",
+            "w",
+            "h",
+            "fmt",
+            "caption",
+            "phash",
+            F.lit(round_id).cast("int").alias("round_id"),
+        )
+
         # ---- execute the round's independent actions CONCURRENTLY.
         # All jobs share the cached pending/denied/selected inputs; only
         # the images job runs the fetch stage. Commit point (the round
         # manifest) comes after every job has finished, so atomicity and
         # resume semantics are unchanged — this only overlaps stage
         # latency, which otherwise serializes the round's small stages.
-        # NOTE: materialize the shared caches once before fan-out so the
-        # concurrent jobs don't race to fill them — at FULL parallelism
-        # (the log append reads the cache with coalesce(2) and must
-        # never be the cache-filling job). A presel hit means this pass
-        # already ran under the previous round's fetch stage.
-        if not preselected:
-            selected.count()
-        _tick("select cache")
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _pj(name, fn):
-            # profile-only: per-concurrent-job wall (measured from its
-            # own start — all jobs fan out together, so this is also
-            # elapsed-since-fan-out at completion)
-            if not _prof:
-                return fn
-
-            def wrapped():
-                j0 = _time.time()
-                r = fn()
-                print(
-                    f"[round {round_id}]   job {name:20s} "
-                    f"{_time.time() - j0:7.2f}s",
-                    flush=True,
-                )
-                return r
-
-            return wrapped
-
         with ThreadPoolExecutor(max_workers=8) as ex:
             # no coalesce on images: it would collapse the upstream
             # mapInPandas fetch. Per-round file count is bounded by the
-            # fetch partitioning (2x parallelism); rewriting image BYTES
-            # for file hygiene has no place on the hot path — at real
-            # scale that is Iceberg's async rewrite_data_files
-            f_img = ex.submit(_pj("images+fetch", lambda: self.images.append(images_df)))
-            f_log = ex.submit(
-                _pj("log append", lambda: self.fetch_log.append(log_df, None, 2))
-            )
+            # fetch partitioning (one wave); rewriting image BYTES for
+            # file hygiene has no place on the hot path — at real scale
+            # that is Iceberg's async rewrite_data_files
+            f_img = ex.submit(self.images.append, images_df)
+            f_log = ex.submit(self.fetch_log.append, log_df, None, 2)
             adaptive_due: list[int] = []
             if not self._merge_seen:
-                f_seen = ex.submit(
-                    _pj("seen append", lambda: self.seen.append(newly_seen, None, 2))
-                )
+                f_seen = ex.submit(self.seen.append, newly_seen, None, 2)
             elif self.recrawl_after is not None:
                 # bucketed MERGE: rewrites only the buckets holding this
                 # round's refreshed URLs (O(delta), not O(seen table))
                 f_seen = ex.submit(
-                    _pj(
-                        "seen merge",
-                        lambda: self.seen.merge(newly_seen, ["url"], self._bucket()),
-                    )
+                    self.seen.merge, newly_seen, ["url"], self._bucket()
                 )
             else:
                 # ADAPTIVE recrawl: the merge rows carry (phash, ttl).
@@ -1488,12 +1532,9 @@ class CrawlEngine:
                     rows.unpersist()
                     return n
 
-                f_seen = ex.submit(_pj("seen merge (adaptive)", _seen_adaptive))
+                f_seen = ex.submit(_seen_adaptive)
             f_due = ex.submit(due.count) if due is not None else None
-            f_front = ex.submit(_pj("frontier update", _frontier_update))
-            f_counts = ex.submit(
-                _pj("counts", lambda: (pending.count(), denied.count()))
-            )
+            f_front = ex.submit(_frontier_update)
             # cheap jobs first: their results decide the next round, so
             # the speculative next-round selection can start while the
             # fetch stage (usually the longest job) is still running
@@ -1501,14 +1542,12 @@ class CrawlEngine:
             stats = obs.get  # observed metrics from the log append
             f_seen.result()
             n_dirty, n_front_rows = f_front.result()
-            n_pending, n_denied = f_counts.result()
             n_due = f_due.result() if f_due is not None else 0
-            _tick("appends+stats")
             counters = self._make_counters(
                 round_id,
                 stats,
-                n_pending,
-                n_denied,
+                fill["pending"],
+                fill["denied"],
                 n_due,
                 n_dirty,
                 n_front_rows,
@@ -1551,29 +1590,14 @@ class CrawlEngine:
                 # SPECULATIVE NEXT-ROUND SELECTION: the frontier commit
                 # for round_id+1 just landed (f_front), and selection
                 # depends on nothing else — pin it and fill its caches
-                # under the remainder of this round's fetch stage. Pure
-                # overlap: no disk effect, discarded if stale.
-                nxt = round_id + 1
-                p_pending = (
-                    self.frontier.read(self.spark)
-                    .filter(F.col("not_before") <= nxt)
-                    .cache()
-                )
-                p_allowed, p_denied = self._filter_robots(p_pending)
-                p_denied = p_denied.cache()
-                # the conditional-fetch 304 overlay is row-local (the
+                # in the background, under the remainder of this round's
+                # fetch stage and the next round's planning. Pure
+                # overlap: no disk effect, discarded if stale. The
+                # conditional-fetch 304 overlay is row-local (the
                 # frontier row carries its own etag_round), so the
-                # speculative selection needs no seen-table read
-                p_selected = self._select_with_status(p_allowed, nxt).cache()
-                ex.submit(p_selected.count)
-                self._presel = {
-                    "round_id": nxt,
-                    "pending": p_pending,
-                    "denied": p_denied,
-                    "selected": p_selected,
-                }
+                # speculative selection needs no seen-table read.
+                self._speculate(round_id + 1)
             f_img.result()
-            _tick("images append (fetch)")
 
         lineage = sorted(
             ({"part_id": int(k), "rows": int(v)} for k, v in acc.value.items()),
@@ -1588,7 +1612,6 @@ class CrawlEngine:
             )
             self.cuckoo.insert(recent.select("url"))
             self._cuckoo_upto = round_id
-        _tick("cuckoo maintenance")
 
         # compaction BEFORE the round commit so the round manifest (the
         # resume/rollback target) references the post-compact snapshot —
@@ -1619,8 +1642,9 @@ class CrawlEngine:
                     keeps.append(int(b))
             self.images.expire(keep_snapshots=keeps or None)
             self.cuckoo.table.expire()
+        self._release_selection(sel)
         for df in (
-            (pending, denied, selected, outlinks, incoming)
+            (outlinks,)
             + ((due,) if due is not None else ())
             + ((sm_rows,) if sm_rows is not None else ())
         ):
@@ -1628,7 +1652,6 @@ class CrawlEngine:
         # release the cuckoo split's cached candidate DF (consumed by
         # the frontier-update job above) — r2 ADVICE #3 leak fix
         self.cuckoo.release_caches()
-        _tick("commit+gc")
         return counters
 
     def _make_counters(

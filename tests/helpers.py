@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 
 
 def read_manifests(eng) -> list[dict]:
@@ -27,3 +29,20 @@ def host_budgets_at(spark, eng, manifest) -> dict[str, int]:
         ).collect()
         if r["budget"] is not None
     }
+
+
+def slow_background_fill(eng, delay: float = 1.5) -> list[int]:
+    """Delay every selection fill that runs off the calling thread (the
+    speculative next-round fill), so it is still running when the round
+    that submitted it returns. Returns the list that each such fill
+    appends its thread id to when it starts."""
+    orig, caller, started = eng._fill, threading.get_ident(), []
+
+    def fill(query):
+        if threading.get_ident() != caller:
+            started.append(threading.get_ident())
+            time.sleep(delay)
+        return orig(query)
+
+    eng._fill = fill
+    return started

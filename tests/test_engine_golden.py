@@ -84,3 +84,16 @@ def test_lineage_and_counters_recorded(crawl):
                 any_lineage = True
                 assert all(p["rows"] > 0 for p in man["lineage"])
     assert any_lineage
+
+
+def test_lineage_sums_to_fetched_per_round(spark, crawl):
+    """Every round's per-partition fetch lineage accounts for exactly its
+    fetched rows, in one wave: no more fetch partitions than slots."""
+    from helpers import read_manifests
+
+    slots = spark.sparkContext.defaultParallelism
+    manifests = read_manifests(crawl["engine"])
+    assert manifests
+    for m in manifests:
+        assert sum(p["rows"] for p in m["lineage"]) == m["counters"]["fetched"]
+        assert all(0 <= p["part_id"] < slots for p in m["lineage"])

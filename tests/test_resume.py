@@ -3,6 +3,7 @@ manifest) must resume and finish bit-identically to an uninterrupted run
 (north_rule: 'a killed run resumes bit-identically')."""
 
 import pandas as pd
+from helpers import slow_background_fill
 
 from crawlspark.engine import CrawlEngine
 from crawlspark.synth import SynthConfig, gen_seeds, host_name
@@ -45,7 +46,10 @@ def test_kill_resume_bit_identical(spark, tmp_path):
         spark, str(tmp_path / "broken"), cfg, politeness_pdf=pol, cuckoo_pg=4
     )
     resumed.run(max_rounds=25)
+    _assert_same_tables(spark, full, resumed)
 
+
+def _assert_same_tables(spark, full, resumed):
     for attr in ("images", "seen", "fetch_log", "frontier"):
         a = getattr(full, attr).read(spark)
         b = getattr(resumed, attr).read(spark)
@@ -57,6 +61,35 @@ def test_kill_resume_bit_identical(spark, tmp_path):
             ha = sorted(r[0] for r in a.selectExpr("md5(bytes)").collect())
             hb = sorted(r[0] for r in b.selectExpr("md5(bytes)").collect())
             assert ha == hb
+
+
+def test_kill_resume_while_speculation_runs(spark, tmp_path):
+    """A crash right after a round whose next-round speculation is still
+    filling: the restarted engine replays bit-identically."""
+    cfg = SynthConfig(n_seeds=60, n_hosts=5, max_depth=1)
+    seeds = gen_seeds(cfg)
+    pol = pd.DataFrame(
+        {
+            "host": [host_name(i) for i in range(1, 6)],
+            "budget": [60 if i <= 2 else 30 for i in range(1, 6)],
+        }
+    )
+    full = _mk(spark, tmp_path, "full", cfg, pol, seeds)
+    full.run(max_rounds=25)
+
+    killed = _mk(spark, tmp_path, "killed", cfg, pol, seeds)
+    started = slow_background_fill(killed)
+    for r in (0, 1):
+        killed.run_round(r)
+    assert len(started) == 2 and not killed._presel["fill"].done()
+    # the "killed" engine is abandoned mid-speculation; a new process
+    # resumes from the committed manifests
+    resumed = CrawlEngine(
+        spark, str(tmp_path / "killed"), cfg, politeness_pdf=pol, cuckoo_pg=4
+    )
+    resumed.run(max_rounds=25)
+    _assert_same_tables(spark, full, resumed)
+    killed._discard_presel()
 
 
 def test_resume_restores_auto_cuckoo_state(spark, tmp_path):
